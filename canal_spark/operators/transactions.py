@@ -8,15 +8,19 @@ store/.../MemoryEventStoreWithBuffer.java:358-377).
 
 Spark analog: a micro-batch (or any replay range) is cut at the LSN of the
 **last complete TRANSACTIONEND**; the incomplete tail is carried into the
-next batch through a small parquet spill (driver-managed state). Marker rows
-(TRANSACTIONBEGIN/END) are envelope-only and never shuffled downstream.
+next batch through a small parquet spill (driver-managed state; a
+transaction-complete batch clears it instead of spilling an empty tail).
+Marker rows (TRANSACTIONBEGIN/END) are envelope-only and never shuffled
+downstream.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,12 +61,15 @@ class TxnTailState:
         return None
 
     def save(self, tail: DataFrame) -> int:
+        """Spill ``tail`` and return its row count, summed from the written
+        files' parquet footers on the driver (no Spark job re-reads it)."""
         p, tmp = self._path(), self._path() + ".tmp"
         tail.coalesce(1).write.mode("overwrite").parquet(tmp)
         if os.path.exists(p):
             shutil.rmtree(p)
         os.replace(tmp, p)
-        return self.spark.read.parquet(p).count()
+        return sum(pq.ParquetFile(f).metadata.num_rows
+                   for f in glob.glob(os.path.join(p, "*.parquet")))
 
     def clear(self) -> None:
         p = self._path()

@@ -222,24 +222,31 @@ def apply_events(events: DataFrame, table: LakeTable,
                  salt_partitions: int | None = None,
                  wire: bool = False,
                  views: list | None = None,
-                 dlq: str | None = None) -> ReplayStats:
+                 dlq: str | None = None,
+                 ddls: list[tuple[str, str]] | None = None) -> ReplayStats:
     """Apply a prepared (filtered, LSN'd, ROWDATA-only) event range:
-    DDL-split sub-ranges, merge each, mirror DDL between them."""
+    DDL-split sub-ranges, merge each, mirror DDL between them.
+
+    ``ddls``: the range's sorted ``(lsn, sql)`` DDL rows, when the caller
+    already aggregated them (the streaming epoch's ``metrics.batch_stats``).
+    The caller then also vouches that the range holds ROWDATA, so neither
+    the emptiness probe nor the DDL collect runs here."""
     stats = ReplayStats()
     if batch_id is not None and table.is_applied(batch_id):
         return stats
     # NOTE: deliberately NOT persisted — the columnar scan + filter is ~3 s
     # per pass at 1M events while caching the wide before/after structs
     # costs more than it saves AND defeats parquet filter pushdown for the
-    # per-range LSN predicates (measured 2× slower with .persist()).
+    # per-range LSN predicates (measured 2× slower with .persist()). A
+    # streaming epoch is small and arrives already cached by its caller.
     events = events.where(F.col("entry_type") == "ROWDATA")
-    if events.isEmpty():  # idle epoch: no data, no metadata churn
-        return stats
-
-    ddls = sorted(
-        (r["lsn"], r["sql"])
-        for r in events.where(F.col("is_ddl")).select("lsn", "sql").collect()
-    )
+    if ddls is None:
+        if events.isEmpty():  # idle epoch: no data, no metadata churn
+            return stats
+        ddls = sorted(
+            (r["lsn"], r["sql"])
+            for r in events.where(F.col("is_ddl")).select("lsn", "sql").collect()
+        )
     dml = events.where(~F.col("is_ddl"))
 
     tracker = SchemaTracker(table)

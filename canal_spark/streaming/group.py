@@ -40,9 +40,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from canal_spark.metrics import MetricsLog, batch_lineage
+from canal_spark.metrics import MetricsLog, batch_stats
 from canal_spark.operators.transactions import TxnTailState
-from canal_spark.pipeline import apply_events, prepare_envelope
+from canal_spark.pipeline import ReplayStats, apply_events, prepare_envelope
 from canal_spark.streaming.replay import _ENVELOPE_DDL
 from canal_spark.table.lake import LakeTable
 
@@ -64,16 +64,18 @@ def merged_lsn_col(src: str = "src_id") -> F.Column:
     )
 
 
-def barrier_split(
+def barrier_cut(
     ev: DataFrame, require_srcs: set | None = None,
-) -> tuple[DataFrame, DataFrame, object, set]:
-    """(released, tail, fence_ts, present_srcs): the transaction-barrier cut.
+) -> tuple[F.Column, object, set]:
+    """(released, fence_ts, present_srcs): the transaction-barrier cut.
 
     ``ev``: envelope-filtered events WITH native per-source lsn and a
-    ``src_id`` column, txn markers included. Released = complete txns whose
-    END falls at-or-before the fence (min cut over sources with data).
-    Driver work is ONE collect of N source rows (each carrying its END
-    markers — txn-count-sized, not event-sized) — no data moves.
+    ``src_id`` column, txn markers included. ``released`` is a non-null
+    boolean Column over ``ev`` marking the complete txns whose END falls
+    at-or-before the fence (min cut over sources with data); every other
+    row carries over. Driver work is ONE collect of N source rows (each
+    carrying its END markers — txn-count-sized, not event-sized) — no data
+    moves.
 
     ``require_srcs``: liveness condition for live tailing — if any of these
     source ids contributed NO rows to this batch, hold everything (a
@@ -93,14 +95,15 @@ def barrier_split(
         F.collect_list(F.when(end, F.struct("execute_ts", "lsn"))).alias("ends"),
     ).collect()
     present = {r["src_id"] for r in per_src}
+    hold = F.lit(False)
     if require_srcs and not set(require_srcs) <= present:
         # a required (live, lagging) source is absent: hold everything
-        return ev.limit(0), ev, None, present
+        return hold, None, present
     if not per_src:
-        return ev.limit(0), ev, None, present
+        return hold, None, present
     if any(r["cut_ts"] is None for r in per_src):
         # a source has rows but no complete txn yet: hold everything
-        return ev.limit(0), ev, None, present
+        return hold, None, present
     fence = min(r["cut_ts"] for r in per_src)
     rel = {}
     for r in per_src:
@@ -111,9 +114,7 @@ def barrier_split(
     rel_map = F.create_map(
         *[F.lit(x) for s, lsn in rel.items() for x in (s, lsn)])
     keep = F.col("lsn") <= rel_map[F.col("src_id")]
-    released = ev.where(F.coalesce(keep, F.lit(False)))
-    tail = ev.where(~F.coalesce(keep, F.lit(False)))
-    return released, tail, fence, present
+    return F.coalesce(keep, F.lit(False)), fence, present
 
 
 class GroupStreamingReplay:
@@ -189,8 +190,9 @@ class GroupStreamingReplay:
     def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         t0 = time.time()
         ev = prepare_envelope(batch_df, table_regex=self.table_regex)
-        ev = self.tail_state.attach(ev)
-        ev = ev.persist()
+        # read once: the barrier's job fills the cache, the stats aggregate,
+        # the merge and the tail spill reuse it (StreamingReplay's epoch)
+        ev = self.tail_state.attach(ev).persist()
         try:
             require = None
             if self.hold_missing_sources:
@@ -199,39 +201,47 @@ class GroupStreamingReplay:
                     if self._missing_streak.get(i, 0) < self.hold_missing_sources
                     and any(f.endswith(".parquet") for f in os.listdir(d))
                 }
-            released, tail, fence, present = barrier_split(ev, require)
+            keep, fence, present = barrier_cut(ev, require)
             if self.hold_missing_sources:
                 for i in range(len(self.log_dirs)):
                     self._missing_streak[i] = (
                         0 if i in present
                         else self._missing_streak.get(i, 0) + 1)
-            released = released.withColumn("lsn", merged_lsn_col())
-            n_rows = released.where(F.col("entry_type") == "ROWDATA").count()
-            lineage = batch_lineage(
-                released.withColumn(
-                    "binlog_file",
-                    F.concat_ws("/", F.col("src_id"), F.col("binlog_file")))
-            ) if n_rows else []
-            stats = apply_events(
-                released, self.table,
-                batch_id=f"epoch-{epoch_id}",
-                salt_partitions=self.salt_partitions,
-                wire=True,
-                views=self.views,
-                dlq=self.dlq_dir,
-            )
-            if n_rows:
+            released = ev.where(keep).withColumn("lsn", merged_lsn_col())
+            # lineage keys by source (file names repeat across shards) and
+            # reports merged LSNs, as do the DDL positions apply_events
+            # splits its ranges at
+            st = batch_stats(
+                ev.withColumn("_released", keep)
+                .withColumn("lsn", merged_lsn_col())
+                .withColumn("binlog_file", F.concat_ws(
+                    "/", F.col("src_id"), F.col("binlog_file"))),
+                F.col("_released"))
+            stats = ReplayStats()
+            if st.rows:
+                stats = apply_events(
+                    released, self.table,
+                    batch_id=f"epoch-{epoch_id}",
+                    salt_partitions=self.salt_partitions,
+                    wire=True,
+                    views=self.views,
+                    dlq=self.dlq_dir,
+                    ddls=st.ddls,
+                )
                 for s in self.message_sinks:
                     s.publish(released, f"{epoch_id:09d}")
             # tail spill AFTER the merge committed (crash ⇒ epoch replays,
             # ledger no-ops, same tail rebuilt) — native lsn kept, the
-            # merged lsn is recomputed on release
-            self.tail_state.save(tail)
+            # merged lsn is recomputed on release; nothing held ⇒ cleared
+            if st.tail_rows:
+                self.tail_state.save(ev.where(~keep))
+            else:
+                self.tail_state.clear()
         finally:
             ev.unpersist()
 
         maint = None
-        if self.maintenance_every and n_rows:
+        if self.maintenance_every and st.rows:
             self._data_epochs += 1
             if self._data_epochs % self.maintenance_every == 0:
                 maint = {"table": self.table.maintain(
@@ -244,14 +254,14 @@ class GroupStreamingReplay:
         self.metrics.append({
             **({"maintenance": maint} if maint else {}),
             "epoch": epoch_id,
-            "rows": n_rows,
+            "rows": st.rows,
             "events_applied": stats.events,
             "quarantined": sum(m.get("quarantined", 0) for m in stats.merges),
             "ranges": stats.ranges,
             "ddls": stats.ddls,
             "fence_ts": str(fence) if fence is not None else None,
             "sources": len(self.log_dirs),
-            "lineage": lineage,
+            "lineage": st.lineage,
             "batch_sec": time.time() - t0,
             "table_version": self.table.version,
         })

@@ -66,7 +66,11 @@ class MirrorStreamingReplay(StreamingReplay):
         self.max_concurrency = max_concurrency
 
     # --------------------------------------------------------- hooks
-    def _apply(self, complete: DataFrame, epoch_id: int | None) -> ReplayStats:
+    def _apply(self, complete: DataFrame, epoch_id: int | None,
+               ddls: list[tuple[str, str]] | None = None) -> ReplayStats:
+        # ``ddls`` (the epoch's DDL rows over EVERY routed table) is not
+        # handed on: mirror_apply routes by table, and each sink's
+        # apply_events probes its own range
         per_sink = mirror_apply(
             complete, self.db,
             batch_id=None if epoch_id is None else f"epoch-{epoch_id}",

@@ -118,7 +118,7 @@ def test_group_streaming_kill_and_resume(spark, tmp_work):
 def test_barrier_holds_for_required_missing_source(spark):
     """Liveness condition (ADVICE r02): a required source absent from the
     batch holds the whole fence; dropping the requirement releases."""
-    from canal_spark.streaming.group import barrier_split
+    from canal_spark.streaming.group import barrier_cut
 
     rows = [
         ("TRANSACTIONBEGIN", 0, "2026-01-01 00:00:00.000001", "a1"),
@@ -131,13 +131,15 @@ def test_barrier_holds_for_required_missing_source(spark):
     ).withColumn("execute_ts", F.col("execute_ts").cast("timestamp"))
 
     # src 1 is required but silent → hold everything
-    released, tail, fence, present = barrier_split(ev, require_srcs={0, 1})
-    assert fence is None and released.count() == 0 and tail.count() == 3
+    keep, fence, present = barrier_cut(ev, require_srcs={0, 1})
+    assert fence is None
+    assert ev.where(keep).count() == 0 and ev.where(~keep).count() == 3
     assert present == {0}
 
     # not required (drained / past its bounded hold) → normal min-cut
-    released, tail, fence, present = barrier_split(ev, require_srcs={0})
-    assert fence is not None and released.count() == 3 and tail.count() == 0
+    keep, fence, present = barrier_cut(ev, require_srcs={0})
+    assert fence is not None
+    assert ev.where(keep).count() == 3 and ev.where(~keep).count() == 0
 
 
 def test_group_streaming_liveness_hold_then_idle(spark, tmp_work):

@@ -7,6 +7,10 @@ column order by name). Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 
+Operator error fails loudly (exit 2, before any query runs): an argument
+with a path separator that is not an existing directory, or a query name
+the registry does not hold.
+
 Driver-faithfulness (VERDICT r04 next #1b — the old gate could NOT
 reproduce the driver's red rows):
 
@@ -52,6 +56,12 @@ def main() -> int:
     explicit_sf = len(sys.argv) > 1 and os.path.isdir(sys.argv[1])
     sf_dir = sys.argv[1] if explicit_sf else "/root/testdata/sf0.01"
     only = set(sys.argv[2:] if explicit_sf else sys.argv[1:])
+    # a mistyped sf_dir must not turn into a query filter (which would then
+    # match nothing and let the gate pass with zero queries checked)
+    paths = sorted(a for a in only if os.sep in a)
+    if paths:
+        print(f"error: not a directory: {', '.join(paths)}", file=sys.stderr)
+        return 2
 
     if explicit_sf:
         # pin the expected-state oracles to THIS gate's sf dir — without it,
@@ -71,10 +81,17 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
+    # building the registry runs no query, so the filter is checked before
+    # the (possibly expensive) oracles: a typo must fail, not filter to none
+    qs = ent.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"error: no registered query named: {', '.join(unknown)}",
+              file=sys.stderr)
+        return 2
     # driver order: the oracle SQL strings (and any expected-state parquet
     # they materialize) are produced before a single query has run
     oracles = ent.oracle_sql()
-    qs = ent.queries()
     spark = get_spark("check_correctness")
     failures = []
     for name, fn in qs.items():
